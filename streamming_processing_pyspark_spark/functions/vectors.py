@@ -45,10 +45,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def cosine_cols(a: Column | str, b: Column | str) -> Column:
-    return cosine(as_double(a), as_double(b))
-
-
 # DataType object, not the DDL string "double": the string form parses via
 # the active SparkContext, which breaks plain module import.
 @F.pandas_udf(DoubleType())

@@ -42,7 +42,7 @@ subset/equivalence assertions against the exact pairs in tests/.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..tables import local_df
@@ -994,6 +994,32 @@ def incremental_minhash_pairs(t: Tables) -> DataFrame:
     return _verify_jaccard(cands, sh, "new_id", "old_id")
 
 
+def _contract_counts(
+    exact: DataFrame, approx: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The exact-vs-approximate contract the recall/subset ``*_check``
+    queries state: one full-outer join of the exact baseline against the approximate
+    operator on ``keys``, each side scanned ONCE, reduced to one row of
+    integer counts — ``n_exact`` and ``n_approx`` (rows per side),
+    ``n_hit`` (in both) and ``n_outside`` (approximate rows the exact set
+    lacks). Counts are never NULL, so empty sides yield zeros."""
+    e = exact.select(*keys, F.lit(1).alias("_in_exact"))
+    a = approx.select(*keys, F.lit(1).alias("_in_approx"))
+    in_exact = F.col("_in_exact").isNotNull()
+    return e.join(a, keys, "full_outer").agg(
+        F.count("_in_exact").alias("n_exact"),
+        F.count("_in_approx").alias("n_approx"),
+        F.count(F.when(in_exact, F.col("_in_approx"))).alias("n_hit"),
+        F.count(F.when(~in_exact, F.col("_in_approx"))).alias("n_outside"),
+    )
+
+
+def _recall_ok(pct: int) -> Column:
+    """Recall flag over :func:`_contract_counts`: ≥ ``pct``% of the exact
+    set was found by the approximate operator."""
+    return F.lit(100) * F.col("n_hit") >= F.lit(pct) * F.col("n_exact")
+
+
 def incremental_ingest_check(t: Tables) -> DataFrame:
     """DuckDB-checkable claim about :func:`incremental_minhash_pairs`
     (itself rows-only): one row with the exact cross-boundary near-dup
@@ -1003,34 +1029,19 @@ def incremental_ingest_check(t: Tables) -> DataFrame:
     (≥ MINHASH_RECALL_PCT%)."""
     is_batch_a = F.col("id_a") % INCR_BATCH_MOD == 0
     is_batch_b = F.col("id_b") % INCR_BATCH_MOD == 0
-    exact_cross = (
-        ngram_jaccard_pairs(t, max_shingle_df=None)
-        .where(is_batch_a != is_batch_b)
-        .select("id_a", "id_b", F.lit(1).alias("in_exact"))
+    exact_cross = ngram_jaccard_pairs(t, max_shingle_df=None).where(
+        is_batch_a != is_batch_b
     )
     # normalize incremental pairs to (min, max) to match the exact set's
     # id_a < id_b orientation
     inc = incremental_minhash_pairs(t).select(
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
-        F.lit(1).alias("in_inc"),
     )
-    j = exact_cross.join(inc, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_cross"),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_inc"))).alias(
-            "n_hit"
-        ),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_inc"))).alias(
-            "n_outside"
-        ),
-    ).select(
-        "n_exact_cross",
+    return _contract_counts(exact_cross, inc, ["id_a", "id_b"]).select(
+        F.col("n_exact").alias("n_exact_cross"),
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(MINHASH_RECALL_PCT) * F.col("n_exact_cross")
-        ).alias("recall_ok"),
+        _recall_ok(MINHASH_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1051,28 +1062,11 @@ def minhash_recall_check(t: Tables) -> DataFrame:
     contract is driver-verified as data — the same bound the local test
     pins, now hash-checked every rotation.
     """
-    # full-outer join, each side scanned ONCE: n_exact / intersection /
-    # lsh-only counts all come from one aggregation
-    exact = ngram_jaccard_pairs(t, max_shingle_df=None).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    lsh = minhash_lsh_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "n_hit"
-        ),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "n_outside"
-        ),
-    ).select(
+    exact = ngram_jaccard_pairs(t, max_shingle_df=None)
+    return _contract_counts(exact, minhash_lsh_pairs(t), ["id_a", "id_b"]).select(
         "n_exact",
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(MINHASH_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        _recall_ok(MINHASH_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1295,28 +1289,14 @@ def containment_recall_check(t: Tables) -> DataFrame:
     the banded route). The uncapped exact side deliberately bypasses
     AUTO_DF_CAP so the subset claim cannot be broken by cap-reduced
     ``common`` (see :func:`containment_pairs`'s cap-asymmetry note)."""
-    exact = containment_pairs(t, max_shingle_df=None).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    banded = containment_pairs_banded(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_banded")
-    )
-    j = exact.join(banded, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_banded"))
-        ).alias("n_hit"),
-        F.count(
-            F.when(F.col("in_exact").isNull(), F.col("in_banded"))
-        ).alias("n_outside"),
+    return _contract_counts(
+        containment_pairs(t, max_shingle_df=None),
+        containment_pairs_banded(t),
+        ["id_a", "id_b"],
     ).select(
         "n_exact",
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(CONTAINMENT_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        _recall_ok(CONTAINMENT_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1524,19 +1504,10 @@ def simhash_band_check(t: Tables) -> DataFrame:
     a = nz.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("f_a"))
     b2 = nz.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("f_b"))
     ham = F.bit_count(F.col("f_a").bitwiseXOR(F.col("f_b")))
-    exact = (
-        a.join(b2, F.col("id_a") < F.col("id_b"))
-        .where(ham <= F.lit(SIMHASH_HAM_MAX))
-        .select("id_a", "id_b", F.lit(1).alias("in_exact"))
+    exact = a.join(b2, F.col("id_a") < F.col("id_b")).where(
+        ham <= F.lit(SIMHASH_HAM_MAX)
     )
-    banded = simhash_near_dup_pairs(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_banded")
-    )
-    j = exact.join(banded, ["id_a", "id_b"], "full_outer")
-    flags = j.agg(
-        F.count(F.when(F.col("in_banded").isNull(), 1)).alias("n_missed"),
-        F.count(F.when(F.col("in_exact").isNull(), 1)).alias("n_outside"),
-    )
+    flags = _contract_counts(exact, simhash_near_dup_pairs(t), ["id_a", "id_b"])
     counts = fps.agg(
         F.count("*").alias("n_docs"),
         F.count(F.when(F.col("simhash").isNull(), 1)).alias("n_excluded"),
@@ -1544,7 +1515,7 @@ def simhash_band_check(t: Tables) -> DataFrame:
     return counts.crossJoin(flags).select(
         "n_docs",
         "n_excluded",
-        (F.col("n_missed") == 0).alias("complete_ok"),
+        (F.col("n_hit") == F.col("n_exact")).alias("complete_ok"),
         (F.col("n_outside") == 0).alias("subset_ok"),
     )
 

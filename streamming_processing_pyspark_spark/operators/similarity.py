@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine_pudf
 from ..tables import fan_out, local_df, persist_replacing
-from .dedup import INCR_BATCH_MOD
+from .dedup import INCR_BATCH_MOD, _contract_counts, _recall_ok
 
 Tables = dict[str, DataFrame]
 
@@ -491,25 +491,9 @@ def hardneg_recall_check(t: Tables) -> DataFrame:
     (rows-only): one row with the exact hard-negative row count
     (SQL-recomputable) and a recall flag — ≥ HARDNEG_RECALL_PCT% of
     exact (vec_id, nbr_id) memberships found by the IVF route."""
-    exact = hard_negative_mining(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
-    )
-    ann = hard_negative_mining_ann(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(HARDNEG_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-    )
+    return _contract_counts(
+        hard_negative_mining(t), hard_negative_mining_ann(t), ["vec_id", "nbr_id"]
+    ).select("n_exact", _recall_ok(HARDNEG_RECALL_PCT).alias("recall_ok"))
 
 
 def _margin_pairs_from(hardnegs: DataFrame) -> DataFrame:
@@ -620,25 +604,9 @@ def bitext_ann_agreement_check(t: Tables) -> DataFrame:
     (rows-only): one row with the exact miner's row count
     (SQL-recomputable) and an agreement flag — ≥ BITEXT_AGREE_PCT% of
     anchors pick the SAME best partner as the exact miner."""
-    exact = bitext_margin_pairs(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
-    )
-    ann = bitext_margin_pairs_ann(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_agree"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_agree")
-            >= F.lit(BITEXT_AGREE_PCT) * F.col("n_exact")
-        ).alias("agree_ok"),
-    )
+    return _contract_counts(
+        bitext_margin_pairs(t), bitext_margin_pairs_ann(t), ["vec_id", "nbr_id"]
+    ).select("n_exact", _recall_ok(BITEXT_AGREE_PCT).alias("agree_ok"))
 
 
 def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
@@ -1030,17 +998,88 @@ def _emb_frame(t: Tables) -> DataFrame:
     )
 
 
-def _branch_parts(spark, k_coarse: int) -> int:
-    """Explicit exchange width for the per-branch Python stages (r12):
-    AQE's byte-based partition coalescing (64 MB advisory) sees only the
-    tiny candidate BYTES and serializes the CPU-per-row numpy branch
-    work into one task (measured: the whole branch top-k ran as a single
-    630 ms task at sf0.1 while 31 cores idled). Pin ~3 partitions per
-    coarse cell (hash spread over few distinct keys, guide §2.5) bounded
-    by the session shuffle width — scale-adaptive through k_coarse ∝
-    √(n/TARGET), no constant tuned to the local core count."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(2, min(width, 3 * k_coarse))
+def _fine_cells(mat, norms) -> list:
+    """Fine level of the two-level quantizer, run inside one coarse
+    branch task: local spherical k-means over the branch's rows (the
+    caller sorts them by vec_id, so init = the lowest ids and float means
+    don't depend on shuffle arrival order), then top-``SEMDEDUP_PROBES``
+    multi-probe membership. Returns each fine cell's row indices.
+
+    Sized on the REPLICATED membership (each row lands in P fine cells),
+    so realized cell size ≈ TARGET; skipped — one cell holding the whole
+    branch — when it cannot prune (k_fine ≤ P would put every member in
+    every cell: pure P× duplication of the branch all-pairs, measured 3×
+    the work for zero pruning). Fewer Lloyd rounds than the coarse
+    level: fine cells only need to be locality-plausible (multi-probe
+    covers the boundaries), and each round costs n_b·k_fine·d — at
+    larger branches that rivals the per-cell work itself. Fine codebooks
+    are built, used and dropped here: they never touch the driver or a
+    broadcast."""
+    import numpy as np
+
+    n_b = len(mat)
+    k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
+    if k_fine <= SEMDEDUP_PROBES:
+        return [np.arange(n_b)]
+    unit = mat / norms[:, None]
+    c = unit[:k_fine].copy()
+    for _ in range(SEMDEDUP_FINE_ITERS):
+        a = (unit @ c.T).argmax(axis=1)
+        for j in np.unique(a):
+            v = mat[a == j].sum(axis=0)
+            nv = np.linalg.norm(v)
+            if nv > 0:
+                c[j] = v / nv
+    # top-P via argpartition (O(k_fine) per row, not a full sort)
+    top = np.argpartition(-(unit @ c.T), SEMDEDUP_PROBES - 1, axis=1)
+    top = top[:, :SEMDEDUP_PROBES]
+    return [np.where((top == j).any(axis=1))[0] for j in range(k_fine)]
+
+
+def _coarse_branches(corpus: DataFrame, route, cells_fn, schema: str) -> DataFrame:
+    """Coarse level of the two-level quantizer plus the per-branch task
+    every semantic ANN operator runs.
+
+    Sizing: k_total = max(SEMDEDUP_K, n/TARGET) and k_coarse = ⌈√k_total⌉
+    (floored at SEMDEDUP_COARSE_MIN). ``corpus`` must already be
+    persisted in the k-means slot (r11): this sizing count is the first
+    of 4+ passes over it (k-means init, every Lloyd round, the final
+    assignment). :func:`_spherical_kmeans` trains the routing centroids;
+    ``route(assign, corpus)`` builds the (vec_id, cluster, vec, …)
+    membership frame; each branch task sorts its rows by vec_id, splits
+    them with :func:`_fine_cells` and returns ``cells_fn(pdf, ids, mat,
+    norms, cells)``.
+
+    Exchange width is pinned (r12): AQE's byte-based partition
+    coalescing (64 MB advisory) sees only the tiny candidate BYTES and
+    serializes the CPU-per-row numpy branch work into one task
+    (measured: the whole branch top-k ran as a single 630 ms task at
+    sf0.1 while 31 cores idled). ~3 partitions per coarse cell (hash
+    spread over few distinct keys, guide §2.5) bounded by the session
+    shuffle width — scale-adaptive through k_coarse ∝ √(n/TARGET), no
+    constant tuned to the local core count."""
+    import numpy as np
+
+    k_total = max(SEMDEDUP_K, int(corpus.count()) // SEMDEDUP_TARGET_CLUSTER)
+    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
+    _, assign, corpus = _spherical_kmeans(corpus, k_coarse, SEMDEDUP_ITERS)
+    width = int(
+        corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    )
+
+    def branch(pdf):
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        mat = np.array(pdf["vec"].tolist(), dtype="float64")
+        norms = np.linalg.norm(mat, axis=1)
+        ids = pdf["vec_id"].to_numpy()
+        return cells_fn(pdf, ids, mat, norms, _fine_cells(mat, norms))
+
+    return (
+        route(assign, corpus)
+        .repartition(max(2, min(width, 3 * k_coarse)), "cluster")
+        .groupBy("cluster")
+        .applyInPandas(branch, schema=schema)
+    )
 
 
 def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
@@ -1048,13 +1087,11 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     quantizer cells only (VERDICT r9 §2) — the candidate source that
     replaces the exact all-pairs blocked matmul in the production graph
     ops. Same two-level spherical quantizer as
-    :func:`semantic_dedup_pairs` (coarse distributed route with
-    multi-probe, per-branch local fine k-means, built/used/dropped
-    inside the branch task), but each fine cell emits per-row TOP-K
-    candidates (ties at the k-th score included, exactly like
-    :func:`knn_join_topk`'s block-local cut) instead of ≥-threshold
-    pairs. The per-anchor global top-k over the deduped candidate union
-    is one bounded window.
+    :func:`semantic_dedup_pairs` (:func:`_coarse_branches`), but each
+    fine cell emits per-row TOP-K candidates (ties at the k-th score
+    included, exactly like :func:`knn_join_topk`'s block-local cut)
+    instead of ≥-threshold pairs. The per-anchor global top-k over the
+    deduped candidate union is one bounded window.
 
     Cost: assignment FLOPs ~n·d·√(n/TARGET), per-cell top-k ~n·TARGET·P²
     (linear in n), candidates ≤ n·P·(k + ties) — never all-pairs.
@@ -1067,20 +1104,7 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     just self."""
     import numpy as np
 
-    # persist BEFORE the sizing count (r11): the count is the first of
-    # 4+ passes over this frame (k-means init, every Lloyd round, the
-    # final assignment) — unpersisted it was one extra full parquet scan
-    # + fan_out shuffle per call. Same slot _spherical_kmeans uses, so
-    # its own persist_replacing call is a sameSemantics no-op.
-    emb = _emb_frame(t)
-    k_total = max(SEMDEDUP_K, int(emb.count()) // SEMDEDUP_TARGET_CLUSTER)
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, emb = _spherical_kmeans(emb, k_coarse, SEMDEDUP_ITERS)
-    assigned = assign(emb, probes=SEMDEDUP_PROBES)
     if with_label:
-        assigned = assigned.join(
-            t["embeddings"].select("vec_id", "label"), "vec_id"
-        )
         schema = (
             "vec_id bigint, label int, nbr_id bigint, nbr_label int,"
             " cos_sim double"
@@ -1090,33 +1114,16 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
         schema = "vec_id bigint, nbr_id bigint, cos_sim double"
         cols = ["vec_id", "nbr_id", "cos_sim"]
 
-    def topk_in_branch(pdf):
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
+    def route(assign, emb):
+        assigned = assign(emb, probes=SEMDEDUP_PROBES)
+        if with_label:
+            assigned = assigned.join(
+                t["embeddings"].select("vec_id", "label"), "vec_id"
+            )
+        return assigned
+
+    def topk_in_cells(pdf, ids, mat, norms, cells):
         labs = pdf["label"].to_numpy() if with_label else None
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # fine-level sizing and probe logic identical to
-        # semantic_dedup_pairs.pairs_in_branch (see its comments)
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
         frames = []
         for idx in cells:
             if len(idx) < 2:
@@ -1152,13 +1159,7 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
             return pd.DataFrame({c: [] for c in cols})
         return pd.concat(frames, ignore_index=True)[cols]
 
-    cands = (
-        assigned.repartition(
-            _branch_parts(emb.sparkSession, k_coarse), "cluster"
-        )
-        .groupBy("cluster")
-        .applyInPandas(topk_in_branch, schema=schema)
-    )
+    cands = _coarse_branches(_emb_frame(t), route, topk_in_cells, schema)
     # multi-probe emits the same candidate from several cells; the
     # grouped max is the deterministic dedup (scores agree up to the
     # BLAS class; max pins the survivor)
@@ -1192,37 +1193,18 @@ def ann_knn_recall_check(t: Tables) -> DataFrame:
     one row with the exact kNN row count (SQL-recomputable) and a
     recall flag — ≥ ANN_KNN_RECALL_PCT% of exact (vec_id, nbr_id) kNN
     memberships are found by the IVF route."""
-    exact = knn_join_topk(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
-    )
-    ann = ann_knn_topk(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(ANN_KNN_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-    )
+    return _contract_counts(
+        knn_join_topk(t), ann_knn_topk(t), ["vec_id", "nbr_id"]
+    ).select("n_exact", _recall_ok(ANN_KNN_RECALL_PCT).alias("recall_ok"))
 
 
-def _mutual_knn_edges(t: Tables) -> DataFrame:
+def _mutual_edges(knn: DataFrame) -> DataFrame:
     """Undirected mutual-kNN graph (a < b; edge iff each is in the
-    other's top-``KNN_K``) — the bounded-degree similarity graph
-    downstream graph analytics run on. PRODUCTION build (VERDICT r9
-    §2): from :func:`ann_knn_topk`'s IVF-routed candidates, so the
-    corpus-sized stage is the linear cell-local top-k, not an all-pairs
-    matmul; mutuality is one intersect of the two directions (shuffle
-    of ≤ n·K id pairs). Edge agreement vs the exact build is
-    driver-checked data (:func:`knn_edge_agreement_check`)."""
-    knn = ann_knn_topk(t).select("vec_id", "nbr_id")
+    other's top-``KNN_K``) of a (vec_id, nbr_id) kNN frame — the
+    bounded-degree similarity graph downstream graph analytics run on;
+    mutuality is one intersect of the two directions (shuffle of ≤ n·K
+    id pairs)."""
+    knn = knn.select("vec_id", "nbr_id")
     fwd = knn.where(F.col("vec_id") < F.col("nbr_id")).select(
         F.col("vec_id").alias("a"), F.col("nbr_id").alias("b")
     )
@@ -1230,20 +1212,22 @@ def _mutual_knn_edges(t: Tables) -> DataFrame:
         F.col("nbr_id").alias("a"), F.col("vec_id").alias("b")
     )
     return fwd.intersect(rev)
+
+
+def _mutual_knn_edges(t: Tables) -> DataFrame:
+    """PRODUCTION mutual-edge build (VERDICT r9 §2): from
+    :func:`ann_knn_topk`'s IVF-routed candidates, so the corpus-sized
+    stage is the linear cell-local top-k, not an all-pairs matmul. Edge
+    agreement vs the exact build is driver-checked data
+    (:func:`knn_edge_agreement_check`)."""
+    return _mutual_edges(ann_knn_topk(t))
 
 
 def _mutual_knn_edges_exact(t: Tables) -> DataFrame:
     """Exact-kNN mutual edge build — the check-priced baseline
     (:func:`knn_join_topk` all-pairs matmul) the agreement check
     compares the production ANN build against."""
-    knn = knn_join_topk(t).select("vec_id", "nbr_id")
-    fwd = knn.where(F.col("vec_id") < F.col("nbr_id")).select(
-        F.col("vec_id").alias("a"), F.col("nbr_id").alias("b")
-    )
-    rev = knn.where(F.col("vec_id") > F.col("nbr_id")).select(
-        F.col("nbr_id").alias("a"), F.col("vec_id").alias("b")
-    )
-    return fwd.intersect(rev)
+    return _mutual_edges(knn_join_topk(t))
 
 
 def knn_edge_agreement_check(t: Tables) -> DataFrame:
@@ -1258,32 +1242,15 @@ def knn_edge_agreement_check(t: Tables) -> DataFrame:
     Everything downstream of the edge list (triangles, label
     propagation) is degree-bounded linear either way; this check
     quantifies the one approximation the repoint introduced."""
-    exact = _mutual_knn_edges_exact(t).select(
-        "a", "b", F.lit(1).alias("in_exact")
-    )
-    ann = _mutual_knn_edges(t).select("a", "b", F.lit(1).alias("in_ann"))
-    j = exact.join(ann, ["a", "b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_edges"),
-        F.count("in_ann").alias("n_ann_edges"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
+    n_ann = F.lit(100) * F.col("n_approx")
+    return _contract_counts(
+        _mutual_knn_edges_exact(t), _mutual_knn_edges(t), ["a", "b"]
     ).select(
-        "n_exact_edges",
+        F.col("n_exact").alias("n_exact_edges"),
+        _recall_ok(KNN_EDGE_RECALL_PCT).alias("recall_ok"),
         (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(KNN_EDGE_RECALL_PCT) * F.col("n_exact_edges")
-        ).alias("recall_ok"),
-        (
-            (
-                F.lit(100) * F.col("n_ann_edges")
-                >= F.lit(KNN_EDGE_RATIO_LO_PCT) * F.col("n_exact_edges")
-            )
-            & (
-                F.lit(100) * F.col("n_ann_edges")
-                <= F.lit(KNN_EDGE_RATIO_HI_PCT) * F.col("n_exact_edges")
-            )
+            (n_ann >= F.lit(KNN_EDGE_RATIO_LO_PCT) * F.col("n_exact"))
+            & (n_ann <= F.lit(KNN_EDGE_RATIO_HI_PCT) * F.col("n_exact"))
         ).alias("edge_ratio_ok"),
     )
 
@@ -1812,6 +1779,18 @@ def lsh_pairs_at_theta(t: Tables) -> DataFrame:
     return lsh_bucketed_pairs(t, threshold=SEMDEDUP_THRESHOLD)
 
 
+def _pair_contract(t: Tables, approx: DataFrame, recall_pct: int) -> DataFrame:
+    """Subset + recall contract of an approximate (id_a, id_b) pair
+    operator against the exact SEMDEDUP_THRESHOLD pair set."""
+    return _contract_counts(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD), approx, ["id_a", "id_b"]
+    ).select(
+        "n_exact",
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _recall_ok(recall_pct).alias("recall_ok"),
+    )
+
+
 def lsh_theta_recall_check(t: Tables) -> DataFrame:
     """Hard driver contract for :func:`lsh_pairs_at_theta`, and — unlike
     ``lsh_subset_check``, whose n_exact is 0 on the test fixtures — one
@@ -1822,27 +1801,7 @@ def lsh_theta_recall_check(t: Tables) -> DataFrame:
     collision probability for cos 0.4 is ~0.16/band, ~50% over 4 bands;
     the pin is set below the worst measured fixture).
     """
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    lsh = lsh_pairs_at_theta(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "_outside"
-        ),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "_overlap"
-        ),
-    ).select(
-        "n_exact",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_overlap")
-            >= F.lit(LSH_THETA_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-    )
+    return _pair_contract(t, lsh_pairs_at_theta(t), LSH_THETA_RECALL_PCT)
 
 
 #: probes per band for the registered multi-probe op — 2 flips of the
@@ -1883,29 +1842,7 @@ def lsh_multiprobe_recall_check(t: Tables) -> DataFrame:
     exact-cosine verified), and a recall floor strictly above the
     single-probe theory value (~50% at cos 0.4), so a regression that
     silently drops the probe keys trips the check."""
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    mp = lsh_multiprobe_pairs(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_lsh")
-    )
-    j = exact.join(mp, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "_outside"
-        ),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "_overlap"
-        ),
-    ).select(
-        "n_exact",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_overlap")
-            >= F.lit(LSH_MULTIPROBE_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-    )
+    return _pair_contract(t, lsh_multiprobe_pairs(t), LSH_MULTIPROBE_RECALL_PCT)
 
 
 def embedding_near_dup_pairs_theta(t: Tables) -> DataFrame:
@@ -1954,33 +1891,30 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
     :func:`incremental_semantic_check`. Float k-means isn't
     SQL-replayable → rows-only; the check is the hash-green contract.
     """
-    import math
-
     import numpy as np
-
-    from ..tables import persist_replacing
 
     emb = fan_out(
         t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
     )
-    # persist the corpus side BEFORE the sizing count (r11): the count,
-    # the k-means init, every Lloyd round and the home assignment all
-    # re-read it — same slot _spherical_kmeans uses. The batch side is
-    # read once (its one assignment pass), as the ingest contract says.
+    # the corpus side sits in the k-means slot (re-read by the sizing
+    # count, every Lloyd round and the home assignment); the batch side
+    # is read once (its one assignment pass), as the ingest contract says
     corpus = persist_replacing(
         emb.where(F.col("vec_id") % INCR_BATCH_MOD != 0),
         "similarity.kmeans_emb",
     )
     batch = emb.where(F.col("vec_id") % INCR_BATCH_MOD == 0)
-    k_total = max(
-        SEMDEDUP_K, int(corpus.count()) // SEMDEDUP_TARGET_CLUSTER
-    )
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, corpus = _spherical_kmeans(corpus, k_coarse, SEMDEDUP_ITERS)
-    c_assigned = assign(corpus, probes=1).withColumn("is_new", F.lit(False))
-    b_assigned = assign(batch, probes=SEMDEDUP_PROBES).withColumn(
-        "is_new", F.lit(True)
-    )
+
+    def route(assign, corpus):
+        return (
+            assign(corpus, probes=1)
+            .withColumn("is_new", F.lit(False))
+            .unionByName(
+                assign(batch, probes=SEMDEDUP_PROBES).withColumn(
+                    "is_new", F.lit(True)
+                )
+            )
+        )
 
     empty = pd.DataFrame(
         {
@@ -1990,40 +1924,12 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
         }
     )
 
-    def cross_in_branch(pdf):
-        # sort: fine init / float means must not depend on shuffle
-        # arrival order (same determinism contract as pairs_in_branch)
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
+    def cross_in_cells(pdf, ids, mat, norms, cells):
+        # the fine split keeps per-cell work TARGET-bounded: without it
+        # the cross matmul is |batch ∩ branch| × |branch| and the branch
+        # is √(n·TARGET) wide at corpus scale, so per-drop cost would
+        # stop tracking the batch
         is_new = pdf["is_new"].to_numpy()
-        if is_new.all() or not is_new.any():
-            return empty
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # fine level inside the branch, identical sizing/probe logic to
-        # semantic_dedup_pairs.pairs_in_branch: without it the cross
-        # matmul is |batch ∩ branch| × |branch| and the branch is
-        # √(n·TARGET) wide at corpus scale — the fine split keeps
-        # per-cell work TARGET-bounded so per-drop cost tracks the batch
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
         out_n: list = []
         out_o: list = []
         out_s: list = []
@@ -2052,16 +1958,12 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
             }
         ).drop_duplicates(["new_id", "old_id"])
 
-    return (
-        c_assigned.unionByName(b_assigned)
-        .repartition(_branch_parts(emb.sparkSession, k_coarse), "cluster")
-        .groupBy("cluster")
-        .applyInPandas(
-            cross_in_branch,
-            schema="new_id bigint, old_id bigint, cos_sim double",
-        )
-        .dropDuplicates(["new_id", "old_id"])
-    )
+    return _coarse_branches(
+        corpus,
+        route,
+        cross_in_cells,
+        "new_id bigint, old_id bigint, cos_sim double",
+    ).dropDuplicates(["new_id", "old_id"])
 
 
 def incremental_semantic_check(t: Tables) -> DataFrame:
@@ -2074,32 +1976,15 @@ def incremental_semantic_check(t: Tables) -> DataFrame:
     the corpus-index probe)."""
     is_batch_a = F.col("id_a") % INCR_BATCH_MOD == 0
     is_batch_b = F.col("id_b") % INCR_BATCH_MOD == 0
-    exact = (
-        _all_pairs_at(t, SEMDEDUP_THRESHOLD)
-        .where(is_batch_a != is_batch_b)
-        .select("id_a", "id_b", F.lit(1).alias("in_exact"))
-    )
+    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).where(is_batch_a != is_batch_b)
     inc = incremental_semantic_pairs(t).select(
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
-        F.lit(1).alias("in_inc"),
     )
-    j = exact.join(inc, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_cross"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_inc"))
-        ).alias("_hit"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_inc"))).alias(
-            "_outside"
-        ),
-    ).select(
-        "n_exact_cross",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_hit")
-            >= F.lit(INCR_SEM_RECALL_PCT) * F.col("n_exact_cross")
-        ).alias("recall_ok"),
+    return _contract_counts(exact, inc, ["id_a", "id_b"]).select(
+        F.col("n_exact").alias("n_exact_cross"),
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _recall_ok(INCR_SEM_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -2113,6 +1998,159 @@ IVF_PROBE = 6
 IVF_KMEANS_ITERS = 5
 
 
+def _quantizer_sample(emb: DataFrame, n_rows: int):
+    """Unit-normalized training sample for the driver-trained quantizers
+    (offline-trainable at 100 TB): every 7th vec_id, ``orderBy(vec_id)``
+    before the ``limit()`` so the sample never depends on scan/cache
+    block arrival order — which is what lets ivf/pq/ivfpq read the shared
+    persisted :func:`_emb_frame` (one cached scan feeds the sample, the
+    query probe, the assignment pass and the re-rank; r12, VERDICT r11
+    §4)."""
+    import numpy as np
+
+    sample = np.array(
+        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
+        .limit(n_rows)
+        .toPandas()["vec"].tolist(),
+        dtype="float64",
+    )
+    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
+    return sample
+
+
+def _sample_kmeans(sample, k: int):
+    """Spherical k-means over a unit sample: init = the first ``k`` rows,
+    ``IVF_KMEANS_ITERS`` Lloyd rounds, unit-mean centroid updates."""
+    import numpy as np
+
+    cents = sample[:k].copy()
+    for _ in range(IVF_KMEANS_ITERS):
+        assign = (sample @ cents.T).argmax(axis=1)
+        for c in range(k):
+            members = sample[assign == c]
+            if len(members):
+                v = members.mean(axis=0)
+                n = np.linalg.norm(v)
+                if n > 0:
+                    cents[c] = v / n
+    return cents
+
+
+def _pq_codebooks(x):
+    """Per-subspace PQ codebooks (``PQ_M`` × ``PQ_K`` × d/PQ_M) trained
+    by plain k-means on the rows of ``x`` — raw vectors for PQ, coarse
+    residuals for IVFPQ."""
+    import numpy as np
+
+    dsub = x.shape[1] // PQ_M
+    books = np.empty((PQ_M, PQ_K, dsub))
+    for m in range(PQ_M):
+        sub = x[:, m * dsub : (m + 1) * dsub]
+        bc = sub[:PQ_K].copy()
+        for _ in range(PQ_KMEANS_ITERS):
+            d2 = ((sub[:, None, :] - bc[None, :, :]) ** 2).sum(axis=2)
+            a = d2.argmin(axis=1)
+            for c in range(PQ_K):
+                members = sub[a == c]
+                if len(members):
+                    bc[c] = members.mean(axis=0)
+        books[m] = bc
+    return books
+
+
+def _adc_table(books, qvec):
+    """ADC lookup table: ``table[m][k] = q_m · c_mk``."""
+    import numpy as np
+
+    dsub = books.shape[2]
+    return np.array(
+        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
+    )
+
+
+def _adc_scores(x, books, table, score):
+    """Encode the rows of ``x`` against ``books`` and add each row's
+    table lookups into ``score`` — executor-side, so codes never
+    materialize (at scale the codes table is written once offline and
+    only this scan runs per query)."""
+    dsub = books.shape[2]
+    for m in range(PQ_M):
+        sub = x[:, m * dsub : (m + 1) * dsub]
+        d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+        score += table[m][d2.argmin(axis=1)]
+    return score
+
+
+def _query_unit_vec(emb: DataFrame):
+    """The L2-normalized query vector (one-row driver fetch)."""
+    import numpy as np
+
+    qvec = np.array(
+        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
+        dtype="float64",
+    )[0]
+    return qvec / np.linalg.norm(qvec)
+
+
+def _adc_shortlist(emb: DataFrame, adc_batches) -> DataFrame:
+    """ADC top-``max(PQ_SHORTLIST, n // PQ_SHORTLIST_FRAC)`` vec_ids as a
+    ``TakeOrderedAndProject`` — ``adc_batches`` is the mapInPandas body
+    emitting (vec_id, adc) rows."""
+    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // PQ_SHORTLIST_FRAC)
+    return (
+        emb.mapInPandas(adc_batches, schema="vec_id bigint, adc double")
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .orderBy(F.col("adc").desc(), F.col("vec_id"))
+        .limit(shortlist_n)
+    )
+
+
+def _exact_rerank(emb: DataFrame, keep: DataFrame, qvec) -> DataFrame:
+    """Exact top-``TOPK`` over the ``keep`` candidates: real rounded
+    cosines (BLAS pandas UDF against the constant unit query array, so
+    cosine == dot/|vec|) — precision of every returned score is exact."""
+    qlit = F.array(*[F.lit(float(x)) for x in qvec])
+    return (
+        emb.join(keep.select("vec_id"), "vec_id", "left_semi")
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .select(
+            "vec_id",
+            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+        .limit(TOPK)
+    )
+
+
+def _topk_recall_check(t: Tables, approx_topk, recall_pct: int) -> DataFrame:
+    """DuckDB-checkable claim about a rows-only approximate top-k (the
+    quantizers aren't reproducible in SQL): one row stating the exact
+    top-k size, that recall vs the brute-force top-k is ≥ ``recall_pct``%,
+    and that every approximate score for an overlapping id equals the
+    brute-force score exactly (the re-rank computes real cosines). The
+    oracle expects both flags TRUE. Full-outer join, each side computed
+    ONCE: exact count / overlap / score agreement from one aggregation."""
+    exact = cosine_topk(t).select("vec_id", "cos_sim")
+    approx = approx_topk(t).select(
+        "vec_id", F.col("cos_sim").alias("approx_sim")
+    )
+    j = exact.join(approx, "vec_id", "full_outer")
+    return j.agg(
+        F.count("cos_sim").alias("n_exact"),
+        F.count(
+            F.when(F.col("cos_sim").isNotNull(), F.col("approx_sim"))
+        ).alias("n_hit"),
+        F.coalesce(
+            F.sum((F.col("approx_sim") != F.col("cos_sim")).cast("long")),
+            F.lit(0),
+        ).alias("n_score_mismatch"),
+    ).select(
+        "n_exact",
+        _recall_ok(recall_pct).alias("recall_ok"),
+        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
+    )
+
+
 def ivf_topk(
     t: Tables, n_centroids: int = IVF_CENTROIDS, n_probe: int = IVF_PROBE
 ) -> DataFrame:
@@ -2124,46 +2162,15 @@ def ivf_topk(
     sample, deterministic seeds), assignment is a map-only matmul per Arrow
     batch, and each query scans ~n_probe/n_centroids of the data. Recall is
     approximate; precision is exact (real cosines on probed rows).
-    Rows-only driver check; recall vs brute force pinned in tests.
+    Rows-only driver check; the contract is :func:`ivf_recall_check`.
     """
     import numpy as np
 
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    # deterministic sample → k-means quantizer (offline-trainable at scale)
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(n_centroids * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    cents = sample[:n_centroids].copy()
-    for _ in range(IVF_KMEANS_ITERS):
-        assign = (sample @ cents.T).argmax(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                n = np.linalg.norm(v)
-                if n > 0:
-                    cents[c] = v / n
-    b_cents = spark.sparkContext.broadcast(cents)
+    cents = _sample_kmeans(_quantizer_sample(emb, n_centroids * 20), n_centroids)
+    b_cents = emb.sparkSession.sparkContext.broadcast(cents)
 
     def assign_buckets(batches):
-        import pandas as pd
-
         cc = b_cents.value
         for pdf in batches:
             mat = np.array(pdf["vec"].tolist(), dtype="float64")
@@ -2176,29 +2183,9 @@ def ivf_topk(
             )
 
     buckets = emb.mapInPandas(assign_buckets, schema="vec_id bigint, bucket int")
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
+    qvec = _query_unit_vec(emb)
     probe = [int(b) for b in np.argsort(-(cents @ qvec))[:n_probe]]
-
-    probed = emb.join(
-        buckets.where(F.col("bucket").isin(probe)).select("vec_id"), "vec_id", "left_semi"
-    )
-    # query side already L2-normalized → cosine == dot/|vec|; score with
-    # the BLAS pandas UDF against the constant query array
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        probed.where(F.col("vec_id") != QUERY_VEC_ID)
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
-    )
+    return _exact_rerank(emb, buckets.where(F.col("bucket").isin(probe)), qvec)
 
 
 #: recall bound the driver-checked IVF claim asserts (percent).
@@ -2210,35 +2197,9 @@ IVF_RECALL_PCT = 75
 
 
 def ivf_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`ivf_topk` (itself rows-only —
-    the quantizer isn't reproducible in SQL): one row stating the exact
-    top-k size, that IVF recall vs the brute-force top-k is ≥
-    IVF_RECALL_PCT%, and that every IVF score for an overlapping id equals
-    the brute-force score exactly (precision is exact — real cosines on
-    probed rows). The oracle expects both flags TRUE, so the approximate
-    index's quality contract is driver-verified as data.
-    """
-    # full-outer join, each side computed ONCE: exact-count / overlap /
-    # score-agreement all come from one aggregation
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    ivf = ivf_topk(t).select("vec_id", F.col("cos_sim").alias("ivf_sim"))
-    j = exact.join(ivf, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(F.when(F.col("cos_sim").isNotNull(), F.col("ivf_sim"))).alias(
-            "n_overlap"
-        ),
-        F.coalesce(
-            F.sum((F.col("ivf_sim") != F.col("cos_sim")).cast("long")), F.lit(0)
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(IVF_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Recall/precision contract for :func:`ivf_topk` at IVF_RECALL_PCT
+    (see :func:`_topk_recall_check`)."""
+    return _topk_recall_check(t, ivf_topk, IVF_RECALL_PCT)
 
 
 def lsh_subset_check(t: Tables) -> DataFrame:
@@ -2249,16 +2210,8 @@ def lsh_subset_check(t: Tables) -> DataFrame:
     precision; recall is the approximate axis and stays test-pinned). The
     oracle expects the flag TRUE.
     """
-    exact = embedding_near_dup_pairs(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    lsh = lsh_bucketed_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "n_outside"
-        ),
+    return _contract_counts(
+        embedding_near_dup_pairs(t), lsh_bucketed_pairs(t), ["id_a", "id_b"]
     ).select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
 
 
@@ -2454,23 +2407,13 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
     _REDUCED_SCHEMA = "cluster int, sum_vec array<double>, cnt long"
 
     def reduce_partials_driver(raw):
-        # driver twin of reduce_cluster (small-P path): identical sort
-        # keys and identical numpy summation per cluster, so centroids
-        # are bit-for-bit the ones the executor pre-reduction produces
-        rows = []
-        for cl, grp in raw.groupby("cluster", sort=True):
-            grp = grp.sort_values(["pid", "seq"], kind="mergesort")
-            total = np.array(
-                grp["sum_vec"].tolist(), dtype="float64"
-            ).sum(axis=0)
-            rows.append(
-                {
-                    "cluster": int(cl),
-                    "sum_vec": total.tolist(),
-                    "cnt": int(grp["cnt"].sum()),
-                }
-            )
-        return pd.DataFrame(rows, columns=["cluster", "sum_vec", "cnt"])
+        # driver twin of the executor pre-reduction (small-P path): the
+        # same reduce_cluster per cluster, so centroids are bit-for-bit
+        # the ones the executor path produces
+        return pd.concat(
+            [reduce_cluster((cl,), grp) for cl, grp in raw.groupby("cluster")],
+            ignore_index=True,
+        )
 
     # one plan→RDD translation per CALL (not per round) to learn the
     # partition count; the persisted frame makes this cheap
@@ -2561,52 +2504,9 @@ def semantic_dedup_pairs(t: Tables) -> DataFrame:
     don't depend on shuffle arrival order. Rows-only driver check (float
     kmeans isn't SQL-replayable); semdedup_check is the hard contract.
     """
-    import math
-
     import numpy as np
 
-    # persist BEFORE the sizing count — see _ann_topk_candidates (r11)
-    emb = _emb_frame(t)
-    k_total = max(SEMDEDUP_K, int(emb.count()) // SEMDEDUP_TARGET_CLUSTER)
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, emb = _spherical_kmeans(emb, k_coarse, SEMDEDUP_ITERS)
-
-    def pairs_in_branch(pdf):
-        # sort: fine init (lowest vec_ids) and float mean order must not
-        # depend on shuffle arrival order
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # size the fine level on the REPLICATED membership (each member
-        # lands in p fine cells), so realized cell size ≈ TARGET; and
-        # skip the fine level entirely when it cannot prune (k_fine ≤ p
-        # would put every member in every cell — pure p× duplication of
-        # the branch all-pairs, measured 3× the work for zero pruning)
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            # fewer Lloyd rounds than the coarse level: the fine cells
-            # only need to be locality-plausible (multi-probe covers the
-            # boundaries), and each round costs n_b·k_fine·d — at larger
-            # branches that rivals the pairwise block itself
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            # top-p via argpartition (O(k_fine) per row, not a full sort)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
+    def pairs_in_cells(pdf, ids, mat, norms, cells):
         out_a: list = []
         out_b: list = []
         out_s: list = []
@@ -2642,15 +2542,12 @@ def semantic_dedup_pairs(t: Tables) -> DataFrame:
             }
         ).drop_duplicates(["id_a", "id_b"])
 
-    return (
-        assign(emb, probes=SEMDEDUP_PROBES)
-        .repartition(_branch_parts(emb.sparkSession, k_coarse), "cluster")
-        .groupBy("cluster")
-        .applyInPandas(
-            pairs_in_branch, schema="id_a bigint, id_b bigint, cos_sim double"
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _coarse_branches(
+        _emb_frame(t),
+        lambda assign, emb: assign(emb, probes=SEMDEDUP_PROBES),
+        pairs_in_cells,
+        "id_a bigint, id_b bigint, cos_sim double",
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def semdedup_check(t: Tables) -> DataFrame:
@@ -2658,16 +2555,10 @@ def semdedup_check(t: Tables) -> DataFrame:
     the EXACT global >=-threshold pair count (oracle-computable in DuckDB)
     and the claim that every SemDeDup pair is one of them (exact
     precision). The oracle recomputes n_exact and expects subset_ok TRUE."""
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
-    )
-    sd = semantic_dedup_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_sd"))
-    j = exact.join(sd, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_sd"))).alias(
-            "n_outside"
-        ),
+    return _contract_counts(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD),
+        semantic_dedup_pairs(t),
+        ["id_a", "id_b"],
     ).select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
 
 
@@ -2715,15 +2606,17 @@ PQ_KMEANS_ITERS = 5
 #: ADC shortlist size before exact re-rank — FLOOR of the corpus-aware
 #: sizing below; see PQ_SHORTLIST_FRAC
 PQ_SHORTLIST = 8 * TOPK
-#: PQ shortlist sizing: max(PQ_SHORTLIST, n // FRAC) — the same faiss
-#: "k-factor" re-rank dial ivfpq_topk applies (r10). A FIXED 8·TOPK
+#: ADC shortlist sizing for pq_topk and ivfpq_topk: max(PQ_SHORTLIST,
+#: n // FRAC) — the faiss "k-factor" re-rank dial. A FIXED 8·TOPK
 #: shortlist under the test corpus's tiny PQ_K=16 codebooks loses true
 #: neighbors into the ADC tail as the corpus grows: measured 80/100/30%
-#: recall at sf0.001/0.01/0.1 before this fix — the sf0.1 cell quietly
-#: under the 60% contract floor the smaller SFs kept green. At
-#: production scale the recall lever is PQ_K=256 codebooks trained on a
-#: real sample, which keeps the shortlist O(TOPK); the fraction is the
-#: small-codebook compensation, exactly as documented for IVFPQ.
+#: PQ recall at sf0.001/0.01/0.1 before this fix — the sf0.1 cell quietly
+#: under the 60% contract floor the smaller SFs kept green — and 30% IVFPQ
+#: recall at n=2000 (stacked coarse + residual quantization noise) vs 70%
+#: at n/6. At production scale the recall lever is PQ_K=256 codebooks
+#: (1 B/sub-space) trained on a real sample, which keeps the shortlist
+#: O(TOPK); the corpus fraction compensates for the fixture-sized
+#: codebooks, not a property you'd ship.
 PQ_SHORTLIST_FRAC = 6
 #: recall bound the driver-checked PQ claim asserts (percent).
 #: r12: measured 60/80/90 at sf0.001/0.01/0.1 — the sf0.001 band sits ON
@@ -2751,117 +2644,30 @@ def pq_topk(t: Tables) -> DataFrame:
     """
     import numpy as np
 
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    # deterministic bounded sample -> per-subspace k-means codebooks
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(PQ_K * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
+    books = _pq_codebooks(_quantizer_sample(emb, PQ_K * 20))
+    qvec = _query_unit_vec(emb)
+    # db vectors are L2-normalized before encoding, so
+    # sum_m table[m][code_m] ~ cosine
+    b_model = emb.sparkSession.sparkContext.broadcast(
+        (books, _adc_table(books, qvec))
     )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    dim = sample.shape[1]
-    dsub = dim // PQ_M
-    books = np.empty((PQ_M, PQ_K, dsub))
-    for m in range(PQ_M):
-        sub = sample[:, m * dsub : (m + 1) * dsub]
-        cents = sub[:PQ_K].copy()
-        for _ in range(PQ_KMEANS_ITERS):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(PQ_K):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books[m] = cents
-    b_books = spark.sparkContext.broadcast(books)
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
-    # ADC lookup table: adc[m][k] = q_m . c_mk  (db vectors are
-    # L2-normalized before encoding, so sum_m adc[m][code_m] ~ cosine)
-    adc = np.array(
-        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
-    )
-    b_adc = spark.sparkContext.broadcast(adc)
 
     def adc_scores(batches):
-        # encode + score in one pass: codes never materialize outside the
-        # executor (at scale the codes table would be written once offline
-        # and only this scoring scan runs per query)
-        bb, tt = b_books.value, b_adc.value
+        bb, tt = b_model.value
         for pdf in batches:
             mat = np.array(pdf["vec"].tolist(), dtype="float64")
             mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            score = np.zeros(len(mat))
-            for m in range(PQ_M):
-                sub = mat[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bb[m][None, :, :]) ** 2).sum(axis=2)
-                score += tt[m][d2.argmin(axis=1)]
+            score = _adc_scores(mat, bb, tt, np.zeros(len(mat)))
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "adc": score})
 
-    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // PQ_SHORTLIST_FRAC)
-    shortlist = (
-        emb.mapInPandas(adc_scores, schema="vec_id bigint, adc double")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(shortlist_n)
-        .select("vec_id")
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(shortlist, "vec_id", "left_semi")
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
-    )
+    return _exact_rerank(emb, _adc_shortlist(emb, adc_scores), qvec)
 
 
 def pq_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`pq_topk` (itself rows-only —
-    k-means codebooks aren't SQL-reproducible): one row stating the exact
-    top-k size, that PQ recall vs the brute-force top-k is ≥
-    PQ_RECALL_PCT%, and that every PQ score for an overlapping id equals
-    the brute-force score exactly (re-rank computes real cosines). The
-    oracle expects both flags TRUE.
-    """
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    pq = pq_topk(t).select("vec_id", F.col("cos_sim").alias("pq_sim"))
-    j = exact.join(pq, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(F.when(F.col("cos_sim").isNotNull(), F.col("pq_sim"))).alias(
-            "n_overlap"
-        ),
-        F.coalesce(
-            F.sum((F.col("pq_sim") != F.col("cos_sim")).cast("long")), F.lit(0)
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(PQ_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Recall/precision contract for :func:`pq_topk` at PQ_RECALL_PCT
+    (see :func:`_topk_recall_check`)."""
+    return _topk_recall_check(t, pq_topk, PQ_RECALL_PCT)
 
 
 #: IVFPQ: recall floor the driver-checked claim asserts (percent). Lower
@@ -2869,16 +2675,6 @@ def pq_recall_check(t: Tables) -> DataFrame:
 #: r12: measured 70/90/90 at sf0.001/0.01/0.1 (deterministic sample) —
 #: floor raised 50 → 65, worst band minus 5 pts.
 IVFPQ_RECALL_PCT = 65
-#: IVFPQ shortlist sizing: max(PQ_SHORTLIST, n // FRAC). The stacked
-#: quantization noise (coarse + residual codes at the test corpus's tiny
-#: PQ_K=16 codebooks) pushes true neighbors deeper into the ADC ranking
-#: as the corpus grows (measured 30% recall at n=2000 with the fixed
-#: 8·TOPK shortlist vs 70% at n/6) — the faiss "k-factor" re-rank dial.
-#: At production scale the recall lever is PQ_K=256 (1 B/sub-space)
-#: trained on a real sample, which keeps the shortlist O(TOPK); the
-#: corpus-fraction floor here compensates for the fixture-sized
-#: codebooks, not a property you'd ship.
-IVFPQ_SHORTLIST_FRAC = 6
 
 
 def ivfpq_topk(
@@ -2907,67 +2703,15 @@ def ivfpq_topk(
     """
     import numpy as np
 
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(n_centroids * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    dim = sample.shape[1]
-    dsub = dim // PQ_M
-
-    # coarse quantizer: deterministic sample k-means (ivf_topk's harness)
-    cents = sample[:n_centroids].copy()
-    for _ in range(IVF_KMEANS_ITERS):
-        assign = (sample @ cents.T).argmax(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                nv = np.linalg.norm(v)
-                if nv > 0:
-                    cents[c] = v / nv
-
-    # shared residual codebooks: train per subspace on sample residuals
-    resid = sample - cents[(sample @ cents.T).argmax(axis=1)]
-    books = np.empty((PQ_M, PQ_K, dsub))
-    for m in range(PQ_M):
-        sub = resid[:, m * dsub : (m + 1) * dsub]
-        bc = sub[:PQ_K].copy()
-        for _ in range(PQ_KMEANS_ITERS):
-            d2 = ((sub[:, None, :] - bc[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(PQ_K):
-                members = sub[a == c]
-                if len(members):
-                    bc[c] = members.mean(axis=0)
-        books[m] = bc
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
+    sample = _quantizer_sample(emb, n_centroids * 20)
+    cents = _sample_kmeans(sample, n_centroids)
+    books = _pq_codebooks(sample - cents[(sample @ cents.T).argmax(axis=1)])
+    qvec = _query_unit_vec(emb)
     probe = np.argsort(-(cents @ qvec))[:n_probe]
     offsets = cents @ qvec  # q·c_b per bucket
-    adc = np.array(
-        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
-    )
-    b_model = spark.sparkContext.broadcast(
+    adc = _adc_table(books, qvec)
+    b_model = emb.sparkSession.sparkContext.broadcast(
         (cents, books, set(int(b) for b in probe), offsets, adc)
     )
 
@@ -2981,61 +2725,18 @@ def ivfpq_topk(
             if not keep.any():
                 continue
             mat, bucket = mat[keep], bucket[keep]
-            resid = mat - cc[bucket]
-            score = off[bucket].copy()
-            for m in range(PQ_M):
-                sub = resid[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bb[m][None, :, :]) ** 2).sum(axis=2)
-                score += tt[m][d2.argmin(axis=1)]
+            score = _adc_scores(mat - cc[bucket], bb, tt, off[bucket].copy())
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy()[keep], "adc": score}
             )
 
-    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // IVFPQ_SHORTLIST_FRAC)
-    shortlist = (
-        emb.mapInPandas(adc_probed, schema="vec_id bigint, adc double")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(shortlist_n)
-        .select("vec_id")
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(shortlist, "vec_id", "left_semi")
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
-    )
+    return _exact_rerank(emb, _adc_shortlist(emb, adc_probed), qvec)
 
 
 def ivfpq_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`ivfpq_topk` (itself rows-only):
-    exact top-k size, recall ≥ IVFPQ_RECALL_PCT% vs brute force, and
-    exact score agreement on the overlap (re-rank computes real
-    cosines). The oracle expects both flags TRUE."""
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    ap = ivfpq_topk(t).select("vec_id", F.col("cos_sim").alias("ivfpq_sim"))
-    j = exact.join(ap, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(
-            F.when(F.col("cos_sim").isNotNull(), F.col("ivfpq_sim"))
-        ).alias("n_overlap"),
-        F.coalesce(
-            F.sum((F.col("ivfpq_sim") != F.col("cos_sim")).cast("long")),
-            F.lit(0),
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(IVFPQ_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Recall/precision contract for :func:`ivfpq_topk` at
+    IVFPQ_RECALL_PCT (see :func:`_topk_recall_check`)."""
+    return _topk_recall_check(t, ivfpq_topk, IVFPQ_RECALL_PCT)
 
 
 #: whitening audit tolerances (on the whitened sample covariance)
@@ -3266,8 +2967,10 @@ def whiten_check(t: Tables) -> DataFrame:
 
     emb = _emb_frame(t)
     mean, zca, _ = _whitening_model(emb)
+    # consumed eagerly by the collect below, so it is released here
+    # rather than parked in the lazy-frame slot (ADVICE r12 #3: repeated
+    # calls without a k-means query piled these up)
     b = emb.sparkSession.sparkContext.broadcast((mean, zca))
-    _ASSIGN_BROADCASTS.append(b)
 
     def whitened_moments(batches):
         from pyspark import TaskContext
@@ -3299,6 +3002,7 @@ def whiten_check(t: Tables) -> DataFrame:
         schema="pid int, n long, s array<double>, g array<double>",
     )
     n, s, g = _collect_moment_partials(parts)
+    b.unpersist(blocking=False)
     d = len(s)
     mu = s / n
     cov = g.reshape(d, d) / n - np.outer(mu, mu)

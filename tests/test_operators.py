@@ -2906,3 +2906,67 @@ def test_moment_driver_reduce_matches_executor_reduce(spark, monkeypatch):
     assert n1 == n2
     assert s1.tobytes() == s2.tobytes()
     assert g1.tobytes() == g2.tobytes()
+
+
+def test_fine_cells_split_is_multi_probe_cover():
+    """The fine level of the two-level quantizer (shared by SemDeDup,
+    incremental semantic ingest and the ANN kNN source) only engages on
+    branches of more than (P+1)·TARGET/P rows — larger than the 500-vector
+    corpora the registry tests and the benchmark run — so pin it
+    directly in numpy: every row lands in exactly min(P, k_fine) cells,
+    the cells cover every row, the split is deterministic, and a small
+    branch stays one cell."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    mat = rng.standard_normal((1200, 16))
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    norms = np.linalg.norm(mat, axis=1)
+    cells = similarity._fine_cells(mat, norms)
+    p = similarity.SEMDEDUP_PROBES
+    k_fine = len(mat) * p // similarity.SEMDEDUP_TARGET_CLUSTER
+    assert len(cells) == k_fine > p
+    membership = np.zeros(len(mat), dtype=int)
+    for idx in cells:
+        membership[idx] += 1
+    assert (membership == min(p, k_fine)).all()
+    again = similarity._fine_cells(mat, norms)
+    assert all(np.array_equal(a, b) for a, b in zip(cells, again))
+
+    small = mat[:300]
+    [only] = similarity._fine_cells(small, norms[:300])
+    assert np.array_equal(only, np.arange(300))
+
+
+def test_contract_counts_on_tiny_frames(spark):
+    """The exact-vs-approximate contract helper behind every *_check
+    query returns one row of integer counts — zeros, never NULL — for
+    overlapping sets, an empty approximate side and two empty sides."""
+    from streamming_processing_pyspark_spark.tables import local_df
+
+    schema = "id_a bigint, id_b bigint"
+    exact = local_df(spark, [(1, 2), (1, 3), (2, 3)], schema)
+    approx = local_df(spark, [(1, 2), (2, 3), (4, 5)], schema)
+    empty = local_df(spark, [], schema)
+    keys = ["id_a", "id_b"]
+    cols = ["n_exact", "n_approx", "n_hit", "n_outside"]
+    for (e, a), want in [
+        ((exact, approx), (3, 3, 2, 1)),
+        ((exact, empty), (3, 0, 0, 0)),
+        ((empty, empty), (0, 0, 0, 0)),
+    ]:
+        [row] = dedup._contract_counts(e, a, keys).collect()
+        assert tuple(row[c] for c in cols) == want
+        assert all(isinstance(row[c], int) for c in cols)
+
+
+def test_whiten_check_releases_its_broadcast(spark):
+    """whiten_check consumes its (mean, zca) broadcast eagerly, so it
+    must not park it in the lazy-frame slot: repeated calls without a
+    k-means query would otherwise accumulate broadcasts."""
+    t = load_tables(spark, SF_DIR)
+    similarity.whiten_check(t).collect()
+    live = len(similarity._ASSIGN_BROADCASTS)
+    for _ in range(3):
+        similarity.whiten_check(t).collect()
+    assert len(similarity._ASSIGN_BROADCASTS) == live
